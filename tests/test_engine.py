@@ -1622,3 +1622,82 @@ def test_surgical_delete_falls_back_below_byte_gate(engine, spark):
     assert deltas["chunk_store"] == -1
     assert eng.verify().count() == 0
     assert eng.get("k001") == rand_bytes(30_000, seed=101)
+
+
+@pytest.mark.parametrize("verb", ["repair", "recover"])
+def test_pooled_fix_error_surfaces_when_chunk_store_commit_fails(engine, monkeypatch, verb):
+    """The object_map fix commits on a pool thread while the chunk_store
+    commit runs on the caller's; when BOTH fail, the fix error must
+    surface (not be swallowed by the pool's join) with the chunk_store
+    error as its context."""
+    from watsondedupe_spark.keys import chunk_key
+
+    spark = engine.spark
+    engine.write("keep", rand_bytes(6000, 7))
+    # an orphan map row (its object never committed) -> object_map fix;
+    # an orphan payload (no chunk row) -> chunk_store GC commit
+    engine.store.append(
+        "object_map",
+        spark.createDataFrame(
+            [("ghost", "ghost_chunk", 1, 0, 0)],
+            "object_key string, chunk_key string, length int, position int, address long",
+        ),
+    )
+    orphan = b"orphan payload"
+    engine.store.append(
+        "chunk_store",
+        spark.createDataFrame(
+            [(chunk_key(orphan), bytearray(orphan))], "chunk_key string, data binary"
+        ),
+    )
+    commit = engine.store.commit
+
+    def failing_commit(name, *args, **kwargs):
+        if name in ("object_map", "chunk_store"):
+            raise RuntimeError(f"{name} commit failed")
+        return commit(name, *args, **kwargs)
+
+    monkeypatch.setattr(engine.store, "commit", failing_commit)
+    with pytest.raises(RuntimeError, match="object_map commit failed") as err:
+        getattr(engine, verb)()
+    assert "chunk_store commit failed" in str(err.value.__context__)
+
+
+def test_surgical_maintenance_drops_null_keys(engine):
+    """NULL-key rows count as dead but never match an anti-join: on the
+    surgical path (forced with SURGICAL_MIN_BYTES = 0) the rows actually
+    dropped must equal the reported deltas, and no NULL key survives."""
+    spark = engine.spark
+    engine.SURGICAL_MIN_BYTES = 0
+    for lo in (0, 4):
+        engine.write_batch(
+            spark.createDataFrame(
+                [(f"n{i}", bytearray(rand_bytes(6000, 200 + i))) for i in range(lo, lo + 4)],
+                "object_key string, data binary",
+            )
+        )
+    victim = engine.chunks.agg(F.min("chunk_key")).collect()[0][0]
+    engine.store.append(
+        "object_map",
+        spark.createDataFrame(
+            [(None, victim, 1, 0, 0)],
+            "object_key string, chunk_key string, length int, position int, address long",
+        ),
+    )
+    engine.store.append(
+        "chunk_store",
+        spark.createDataFrame([(None, bytearray(b"null key"))], "chunk_key string, data binary"),
+    )
+    before = {t: engine.store.read(t).count() for t in ("object_map", "chunk_store")}
+    deltas = engine.repair()
+    after = {t: engine.store.read(t).count() for t in ("object_map", "chunk_store")}
+    assert deltas["object_map"] == after["object_map"] - before["object_map"] == -1
+    assert (
+        deltas["chunk_store"] + deltas["chunk_store_canonicalized"]
+        == after["chunk_store"] - before["chunk_store"]
+        == -1
+    )
+    for t, col in (("object_map", "object_key"), ("chunk_store", "chunk_key")):
+        assert engine.store.read(t).filter(F.col(col).isNull()).count() == 0
+    assert engine.verify().count() == 0
+    assert engine.get("n5") == rand_bytes(6000, 205)

@@ -99,39 +99,101 @@ def test_manifest_meta_carries_forward_and_replaces(spark, tmp_path, store_cls):
 # -- optimistic concurrency (CAS) -------------------------------------------
 
 
-def test_cas_commit_refuses_stale_version(spark, tmp_path, store_cls):
-    """A commit armed with expected_version must refuse to overwrite a
+def _assert_no_unpublished_parts(st, name):
+    """Every part dir on disk is referenced by the current or a retained
+    manifest: a refused publish left nothing behind (GC spares young
+    dirs, so a leaked part would still be here)."""
+    import os
+
+    st._gc(name)
+    referenced = set()
+    for state in [st._state(name)] + [st._state_version(name, v) for v in st.versions(name)]:
+        referenced |= {os.path.basename(p) for p in state["parts"]}
+    on_disk = {e for e in os.listdir(st._table_dir(name)) if e.startswith("p")}
+    assert on_disk <= referenced
+
+
+@pytest.mark.parametrize("publish", ["commit", "compact_parts"])
+def test_cas_commit_refuses_stale_version(spark, tmp_path, store_cls, publish):
+    """A replace armed with expected_version, or a compaction of a part
+    another writer already retired, must refuse to overwrite the
     concurrent writer's commit — the lost-update guard."""
     st = store_cls(spark, str(tmp_path))
     df = spark.createDataFrame([(1,)], "x long")
     st.commit("t", df)                       # v1
     v = st.current_version("t")
-    st.commit("t", df)                       # concurrent writer lands v2
-    with pytest.raises(ConcurrentWriteError):
-        st.commit("t", df, expected_version=v)
+    if publish == "commit":
+        st.commit("t", df)                   # concurrent writer lands v2
+        with pytest.raises(ConcurrentWriteError):
+            st.commit("t", df, expected_version=v)
+        assert st.current_version("t") == 2
+    else:
+        st.append("t", df)                   # v2: two live parts
+        parts = st.live_parts("t")
+        st.compact_parts("t", parts[:1])     # concurrent writer retires one (v3)
+        with pytest.raises(ConcurrentWriteError):
+            st.compact_parts("t", parts)
+        assert st.current_version("t") == 3
     # the refused part must not leak into the table or onto disk
-    assert st.current_version("t") == 2
-    st._gc("t")
-    live = {p.split("/")[-1] for p in st._state("t")["parts"]}
+    _assert_no_unpublished_parts(st, "t")
+
+
+@pytest.mark.parametrize("publish", ["append", "attach_part"])
+def test_cas_append_refuses_stale_version(spark, tmp_path, store_cls, publish):
     import os
 
-    on_disk = {e for e in os.listdir(st._table_dir("t")) if e.startswith("p")}
-    retained = set()
-    for ver in st.versions("t"):
-        sv = st._state_version("t", ver)
-        retained |= {p.split("/")[-1] for p in sv["parts"]}
-    assert on_disk <= live | retained
-
-
-def test_cas_append_refuses_stale_version(spark, tmp_path, store_cls):
     st = store_cls(spark, str(tmp_path))
     df = spark.createDataFrame([(1,)], "x long")
     st.commit("t", df)
     v = st.current_version("t")
     st.append("t", df)
     with pytest.raises(ConcurrentWriteError):
-        st.append("t", df, expected_version=v)
-    assert st.read("t").count() == 2  # the stale append added nothing
+        if publish == "append":
+            st.append("t", df, expected_version=v)
+        else:
+            staged = st.stage_part("t", df, v + 1)
+            st.attach_part("t", staged, expected_version=v)
+    if publish == "attach_part":
+        assert not os.path.exists(staged)
+    assert st.read("t").count() == 2  # the stale publish added nothing
+    _assert_no_unpublished_parts(st, "t")
+
+
+def test_attach_part_folds_at_max_parts(spark, tmp_path, store_cls):
+    """At max_parts an attach folds the live rows and the staged part
+    into ONE part, applies meta_merge, removes the staged dir, and still
+    honours its CAS version."""
+    import os
+
+    st = store_cls(spark, str(tmp_path))
+    st.max_parts = 3
+    st.commit("objects", _df(spark, 0, 5), meta={"clustered_parts": ["x"]})
+    st.append("objects", _df(spark, 5, 10))
+    st.append("objects", _df(spark, 10, 15))
+    v = st.current_version("objects")
+    staged = st.stage_part("objects", _df(spark, 15, 20), v + 1)
+    new = st.attach_part(
+        "objects", staged, meta_merge={"max_id": 19}, expected_version=v
+    )
+    assert new == v + 1
+    assert len(st.live_parts("objects")) == 1
+    assert sorted(r.id for r in st.read("objects").collect()) == list(range(20))
+    assert st.table_meta("objects") == {"clustered_parts": ["x"], "max_id": 19}
+    assert not os.path.exists(staged)
+    _assert_no_unpublished_parts(st, "objects")
+
+    # a stale expected_version on the fold path raises and cleans up
+    st.append("objects", _df(spark, 20, 25))
+    st.append("objects", _df(spark, 25, 30))
+    v = st.current_version("objects")
+    staged = st.stage_part("objects", _df(spark, 30, 35), v + 1)
+    st.append("objects", _df(spark, 35, 40))  # concurrent writer; still full
+    with pytest.raises(ConcurrentWriteError):
+        st.attach_part("objects", staged, meta_merge={"max_id": 34}, expected_version=v)
+    assert not os.path.exists(staged)
+    assert st.read("objects").count() == 35
+    assert st.table_meta("objects")["max_id"] == 19
+    _assert_no_unpublished_parts(st, "objects")
 
 
 def test_concurrent_appends_rebase_no_lost_parts(spark, tmp_path, store_cls):

@@ -864,6 +864,20 @@ class DedupeEngine:
             chunks=self.get_chunks(key).collect(),
         )
 
+    def _payloads(self, chunk_keys: set[str]) -> dict[str, bytes]:
+        """Payload bytes of ``chunk_keys``, fetched in one Bloom-pruned
+        ``chunk_store`` read (spans cannot discriminate uniform hash
+        keys — store.BLOOM_COLS); absent keys are simply missing."""
+        keys = list(chunk_keys)
+        return {
+            r.chunk_key: bytes(r.data)
+            for r in self.store.read_point(
+                "chunk_store", "chunk_key", keys, CHUNK_STORE_SCHEMA
+            )
+            .filter(F.col("chunk_key").isin(keys))
+            .collect()
+        }
+
     def get(self, key: str) -> bytes:
         """O6: point lookup + reassembly (DedupeLibrary.cs:377-404).
 
@@ -884,15 +898,7 @@ class DedupeEngine:
         map_rows = self.get_object_map(key).select("address", "chunk_key").collect()
         if not map_rows:
             raise ObjectNotFoundError(key)
-        keys = list({r.chunk_key for r in map_rows})
-        payloads = {
-            r.chunk_key: bytes(r.data)
-            for r in self.store.read_point(
-                "chunk_store", "chunk_key", keys, CHUNK_STORE_SCHEMA
-            )
-            .filter(F.col("chunk_key").isin(keys))
-            .collect()
-        }
+        payloads = self._payloads({r.chunk_key for r in map_rows})
         return b"".join(
             payloads[r.chunk_key] for r in sorted(map_rows, key=lambda r: r.address)
         )
@@ -972,15 +978,7 @@ class DedupeEngine:
         )
         if not overlap_rows:
             return b""
-        keys = list({r.chunk_key for r in overlap_rows})
-        payloads = {
-            r.chunk_key: bytes(r.data)
-            for r in self.store.read_point(
-                "chunk_store", "chunk_key", keys, CHUNK_STORE_SCHEMA
-            )
-            .filter(F.col("chunk_key").isin(keys))
-            .collect()
-        }
+        payloads = self._payloads({r.chunk_key for r in overlap_rows})
         buf = bytearray()
         for r in sorted(overlap_rows, key=lambda r: r.address):
             data = payloads[r.chunk_key]
@@ -1505,24 +1503,32 @@ class DedupeEngine:
 
     def repair(self) -> dict[str, int]:
         """Fix every :meth:`verify` violation class that is fixable
-        from the index itself, in one maintenance pass:
+        from the index itself, in ONE fused maintenance pass under the
+        composite-op lock:
 
-        - :meth:`recover` first — prunes orphan map rows (uncommitted
-          objects), rebuilds refcounts from the surviving map, and GCs
-          payloads whose chunk row is gone (which also clears
-          ``orphan_payload``);
-        - then the payload store is CANONICALIZED: among each
-          chunk_key's rows, only content that actually hashes to the
-          key survives (dropping garbage/tampered rows —
-          ``hash_mismatch`` and its ``length_drift``), and exactly one
-          survivor is kept (``dup_payload``; hash-verified survivors
-          are byte-identical, so the pick is content-deterministic).
+        - the object_map and chunks phases of :meth:`recover` — orphan
+          map rows (uncommitted objects) are pruned and refcounts
+          rebuilt from the surviving map, their commits overlapping the
+          payload scan below;
+        - ONE per-key aggregate over the payload store then finds both
+          payloads whose chunk row is gone (``orphan_payload``, GC'd as
+          in recover) and live keys whose rows are bad: only content
+          that actually hashes to the key survives (``hash_mismatch``
+          and its ``length_drift``), and exactly one survivor is kept
+          (``dup_payload``; hash-verified survivors are byte-identical,
+          so the pick is content-deterministic). ONE chunk_store commit
+          applies both fixes — a surgical rewrite of only the affected
+          parts when the damage is bounded.
 
         A chunk whose ONLY payload row is corrupt cannot be healed from
         the index — its garbage row is dropped and the loss surfaces
         honestly as ``missing_payload`` on the next verify instead of
         as silently wrong bytes on some future get. Idempotent like
-        recover(); returns recover's per-table deltas plus the count of
+        recover(). A pass that changed anything records ONE ``"repair"``
+        ledger point after every fix has landed — there is no separate
+        ``"recover"`` point for the intermediate post-GC state, so
+        ``restore``/``clone(at=)`` can reach only the fully repaired
+        state. Returns recover's per-table deltas plus the count of
         canonicalization-dropped payload rows.
         """
         from concurrent.futures import ThreadPoolExecutor
@@ -1533,144 +1539,150 @@ class DedupeEngine:
         # lock OUTSIDE the pool (recover()'s contract): the pool exit
         # joins in-flight fix threads before the lock releases
         with self.store.op_lock(), ThreadPoolExecutor(max_workers=2) as pool:
-            deltas, rebuilt, committed_mc = self._recover_map_chunks(pool, fixes)
-            # FUSED chunk_store phase (r13 session 3, guide §1.2/§2.6):
-            # repair used to run recover()'s membership scan + GC
-            # rewrite and THEN a second sha-detection scan + a second
-            # canonicalization rewrite — two passes over the payload
-            # table and, with both damage classes present, two full
-            # rewrites of it inside one maintenance call. One per-key
-            # aggregate now computes BOTH: the sha/dup detection rides
-            # the same groupBy that the GC membership join annotates
-            # (_live from the rebuilt chunks), and a single commit
-            # applies both fixes. The scan also starts while the
-            # map/chunks fixes are still committing — it reads only the
-            # pinned chunk_store snapshot and the eagerly-checkpointed
-            # rebuild, never a table another thread is writing.
-            # null-safe mirror of verify(): a NULL-payload row must
-            # count as bad (and must NOT survive canonicalization)
-            # rather than vanishing from both filters as NULL.
-            v_cs, cstore, _ = self.store.snapshot("chunk_store", CHUNK_STORE_SCHEMA)
-            live_keys = rebuilt.select("chunk_key")
-            is_live = F.col("_live").isNotNull()
-            bad_pred = is_live & ((F.col("_n") > 1) | (F.col("_n_mismatch") > 0))
-            dead_pred = F.col("_live").isNull()
-            per_key = (
-                cstore.select(
-                    "chunk_key",
-                    chunk_key_col(F.col("data")).alias("_computed"),
+            try:
+                deltas, rebuilt, committed_mc = self._recover_map_chunks(pool, fixes)
+                # FUSED chunk_store phase (r13 session 3, guide §1.2/§2.6):
+                # repair used to run recover()'s membership scan + GC
+                # rewrite and THEN a second sha-detection scan + a second
+                # canonicalization rewrite — two passes over the payload
+                # table and, with both damage classes present, two full
+                # rewrites of it inside one maintenance call. One per-key
+                # aggregate now computes BOTH: the sha/dup detection rides
+                # the same groupBy that the GC membership join annotates
+                # (_live from the rebuilt chunks), and a single commit
+                # applies both fixes. The scan also starts while the
+                # map/chunks fixes are still committing — it reads only the
+                # pinned chunk_store snapshot and the eagerly-checkpointed
+                # rebuild, never a table another thread is writing.
+                # null-safe mirror of verify(): a NULL-payload row must
+                # count as bad (and must NOT survive canonicalization)
+                # rather than vanishing from both filters as NULL.
+                v_cs, cstore, _ = self.store.snapshot("chunk_store", CHUNK_STORE_SCHEMA)
+                live_keys = rebuilt.select("chunk_key")
+                is_live = F.col("_live").isNotNull()
+                bad_pred = is_live & ((F.col("_n") > 1) | (F.col("_n_mismatch") > 0))
+                dead_pred = F.col("_live").isNull()
+                per_key = (
+                    cstore.select(
+                        "chunk_key",
+                        chunk_key_col(F.col("data")).alias("_computed"),
+                    )
+                    .groupBy("chunk_key")
+                    .agg(
+                        F.count("*").alias("_n"),
+                        F.sum(
+                            F.when(
+                                ~F.col("_computed").eqNullSafe(F.col("chunk_key")), 1
+                            ).otherwise(0)
+                        ).alias("_n_mismatch"),
+                    )
+                    .join(live_keys.withColumn("_live", F.lit(1)), "chunk_key", "left")
+                    # lazy checkpoint, materialized by the aggregate below —
+                    # the damaged-path key collects then read per-key ROWS
+                    # (O(keys), no payload bytes) instead of re-running the
+                    # whole sha scan per action (the pre-fusion surgical
+                    # path re-hashed the entire table once per key collect)
+                    .localCheckpoint(eager=False)
                 )
-                .groupBy("chunk_key")
-                .agg(
-                    F.count("*").alias("_n"),
+                # detection numbers are scoped to LIVE keys — identical to
+                # the old post-GC detection by construction (GC removed
+                # exactly the dead keys' rows before the old scan ran)
+                agg_row = per_key.agg(
+                    F.sum("_n"),
+                    F.sum(F.when(is_live, F.col("_n")).otherwise(0)),
+                    F.sum(F.when(is_live, F.col("_n_mismatch")).otherwise(0)),
+                    F.sum(F.when(is_live, 1).otherwise(0)),
+                    F.sum(F.when(dead_pred, 1).otherwise(0)),
+                    F.sum(F.when(bad_pred, 1).otherwise(0)),
                     F.sum(
                         F.when(
-                            ~F.col("_computed").eqNullSafe(F.col("chunk_key")), 1
+                            is_live & (F.col("_n") > F.col("_n_mismatch")), 1
                         ).otherwise(0)
-                    ).alias("_n_mismatch"),
-                )
-                .join(live_keys.withColumn("_live", F.lit(1)), "chunk_key", "left")
-                # lazy checkpoint, materialized by the aggregate below —
-                # the damaged-path key collects then read per-key ROWS
-                # (O(keys), no payload bytes) instead of re-running the
-                # whole sha scan per action (the pre-fusion surgical
-                # path re-hashed the entire table once per key collect)
-                .localCheckpoint(eager=False)
-            )
-            # detection numbers are scoped to LIVE keys — identical to
-            # the old post-GC detection by construction (GC removed
-            # exactly the dead keys' rows before the old scan ran)
-            agg_row = per_key.agg(
-                F.sum("_n"),
-                F.sum(F.when(is_live, F.col("_n")).otherwise(0)),
-                F.sum(F.when(is_live, F.col("_n_mismatch")).otherwise(0)),
-                F.sum(F.when(is_live, 1).otherwise(0)),
-                F.sum(F.when(dead_pred, 1).otherwise(0)),
-                F.sum(F.when(bad_pred, 1).otherwise(0)),
-                F.sum(
-                    F.when(
-                        is_live & (F.col("_n") > F.col("_n_mismatch")), 1
-                    ).otherwise(0)
-                ),
-            ).collect()[0]
-            (
-                n_rows_all, n_rows, n_mismatch, n_keys,
-                n_dead_keys, n_bad_keys, n_good_keys,
-            ) = (int(x or 0) for x in agg_row)
-            n_dead = n_rows_all - n_rows
-            n_bad = n_mismatch + n_rows - n_keys
-            deltas["chunk_store"] = -n_dead
-            # n_good_keys IS the canonical live row count (canonicalize
-            # keeps exactly one hash-verified survivor per such key), so
-            # the post-rewrite delta needs no second table count; with
-            # nothing bad it equals n_rows and the delta is 0
-            deltas["chunk_store_canonicalized"] = n_good_keys - n_rows
-            if n_dead or n_bad:
-                good = chunk_key_col(F.col("data")).eqNullSafe(F.col("chunk_key"))
+                    ),
+                ).collect()[0]
+                (
+                    n_rows_all, n_rows, n_mismatch, n_keys,
+                    n_dead_keys, n_bad_keys, n_good_keys,
+                ) = (int(x or 0) for x in agg_row)
+                n_dead = n_rows_all - n_rows
+                n_bad = n_mismatch + n_rows - n_keys
+                deltas["chunk_store"] = -n_dead
+                # n_good_keys IS the canonical live row count (canonicalize
+                # keeps exactly one hash-verified survivor per such key), so
+                # the post-rewrite delta needs no second table count; with
+                # nothing bad it equals n_rows and the delta is 0
+                deltas["chunk_store_canonicalized"] = n_good_keys - n_rows
+                if n_dead or n_bad:
+                    good = chunk_key_col(F.col("data")).eqNullSafe(F.col("chunk_key"))
 
-                # r12 (guide §6): bounded damage must not rewrite the
-                # whole payload table at 100 TB. Select ONLY the live
-                # parts that may contain a doomed key (span + Bloom —
-                # no false negatives, so every row of every dead OR bad
-                # key lives in the selected subset, cross-part
-                # duplicates included) and fold just those through the
-                # combined GC+canonicalization layout. Healthy parts
-                # keep their bytes untouched. Widespread damage falls
-                # back to one full rewrite (still one, not two).
-                affected = dead_rows = None
-                live_parts = self.store.live_parts("chunk_store")
-                if (
-                    n_dead_keys + n_bad_keys <= self.REPAIR_SURGICAL_MAX_KEYS
-                    and self.store.parts_bytes(live_parts)
-                    >= self.SURGICAL_MIN_BYTES
-                ):
-                    doomed_rows = (
-                        per_key.filter(dead_pred | bad_pred)
-                        .select("chunk_key", dead_pred.alias("_dead"))
-                        .collect()
-                    )
-                    dead_rows = [r.chunk_key for r in doomed_rows if r._dead]
-                    affected = self.store.parts_for_keys(
-                        "chunk_store",
-                        "chunk_key",
-                        [r.chunk_key for r in doomed_rows],
-                    )
+                    # r12 (guide §6): bounded damage must not rewrite the
+                    # whole payload table at 100 TB. Select ONLY the live
+                    # parts that may contain a doomed key (span + Bloom —
+                    # no false negatives, so every row of every dead OR bad
+                    # key lives in the selected subset, cross-part
+                    # duplicates included) and fold just those through the
+                    # combined GC+canonicalization layout. Healthy parts
+                    # keep their bytes untouched. Widespread damage falls
+                    # back to one full rewrite (still one, not two).
+                    affected = dead_rows = None
+                    live_parts = self.store.live_parts("chunk_store")
+                    if (
+                        n_dead_keys + n_bad_keys <= self.REPAIR_SURGICAL_MAX_KEYS
+                        and self.store.parts_bytes(live_parts)
+                        >= self.SURGICAL_MIN_BYTES
+                    ):
+                        doomed_rows = (
+                            per_key.filter(dead_pred | bad_pred)
+                            .select("chunk_key", dead_pred.alias("_dead"))
+                            .collect()
+                        )
+                        dead_rows = [r.chunk_key for r in doomed_rows if r._dead]
+                        affected = self.store.parts_for_keys(
+                            "chunk_store",
+                            "chunk_key",
+                            [r.chunk_key for r in doomed_rows],
+                        )
 
-                def fused_layout(df: DataFrame) -> DataFrame:
-                    # dead keys: hash-consistent rows whose chunk is
-                    # gone — only the membership filter can drop them;
-                    # bad keys: filter to hash-verified rows, keep one
-                    # survivor (content-deterministic: verified
-                    # survivors are byte-identical). Healthy rows pass
-                    # both filters untouched.
-                    out = df
-                    if n_dead:
-                        if dead_rows is not None:
-                            dead_df = self.spark.createDataFrame(
-                                [(k,) for k in dead_rows], "chunk_key string"
-                            )
-                            out = out.join(
-                                F.broadcast(dead_df), "chunk_key", "left_anti"
-                            )
-                        else:
-                            out = out.join(live_keys, "chunk_key", "left_semi")
-                    if n_bad:
-                        out = out.filter(good).dropDuplicates(["chunk_key"])
-                    return out
+                    def fused_layout(df: DataFrame) -> DataFrame:
+                        # dead keys: hash-consistent rows whose chunk is
+                        # gone — only the membership filter can drop them;
+                        # bad keys: filter to hash-verified rows, keep one
+                        # survivor (content-deterministic: verified
+                        # survivors are byte-identical). Healthy rows pass
+                        # both filters untouched.
+                        out = df
+                        if n_dead:
+                            if dead_rows is not None:
+                                dead_df = self.spark.createDataFrame(
+                                    [(k,) for k in dead_rows], "chunk_key string"
+                                )
+                                # a NULL key is dead but never matches
+                                # the anti-join: drop it explicitly
+                                out = out.filter(
+                                    F.col("chunk_key").isNotNull()
+                                ).join(F.broadcast(dead_df), "chunk_key", "left_anti")
+                            else:
+                                out = out.join(live_keys, "chunk_key", "left_semi")
+                        if n_bad:
+                            out = out.filter(good).dropDuplicates(["chunk_key"])
+                        return out
 
-                if affected is not None and len(affected) < len(live_parts):
-                    self.store.compact_parts(
-                        "chunk_store", affected, layout=fused_layout
-                    )
-                else:
-                    dead_rows = None  # full path: distributed semi-join
-                    self.store.commit(
-                        "chunk_store", fused_layout(cstore), expected_version=v_cs
-                    )
-            # every overlapped fix must land (and re-raise) before the
-            # ledger row claims the repaired state exists
-            for f in fixes:
-                f.result()
+                    if affected is not None and len(affected) < len(live_parts):
+                        self.store.compact_parts(
+                            "chunk_store", affected, layout=fused_layout
+                        )
+                    else:
+                        dead_rows = None  # full path: distributed semi-join
+                        self.store.commit(
+                            "chunk_store", fused_layout(cstore), expected_version=v_cs
+                        )
+            finally:
+                # every overlapped fix must land (and re-raise) before the
+                # ledger row claims the repaired state exists — also when
+                # this pass failed, whose error becomes the fix error's
+                # context instead of hiding it
+                for f in fixes:
+                    f.result()
             if committed_mc or n_dead or n_bad:
                 self._record_checkpoint("repair")
         return deltas
@@ -2001,7 +2013,9 @@ class DedupeEngine:
         systemic damage. Correctness leans on Bloom having no false
         negatives: every row of every doomed key lives inside the
         selected parts, so the bounded broadcast anti-join removes all
-        of them and healthy parts keep their bytes untouched."""
+        of them and healthy parts keep their bytes untouched. A doomed
+        NULL key has no span or Bloom witness, so selection keeps every
+        part and the caller's full rewrite runs."""
         live = self.store.live_parts(name)
         if self.store.parts_bytes(live) < self.SURGICAL_MIN_BYTES:
             return False  # small table: a full rewrite is cheaper
@@ -2018,7 +2032,11 @@ class DedupeEngine:
         self.store.compact_parts(
             name,
             affected,
-            layout=lambda df: df.join(F.broadcast(doomed_df), col, "left_anti"),
+            # a doomed NULL key never matches the anti-join: the layout
+            # drops it itself instead of relying on the widened selection
+            layout=lambda df: (
+                df.filter(F.col(col).isNotNull()) if None in doomed else df
+            ).join(F.broadcast(doomed_df), col, "left_anti"),
         )
         return True
 
@@ -2171,40 +2189,44 @@ class DedupeEngine:
         # lock OUTSIDE the pool: the pool's exit joins any in-flight fix
         # thread BEFORE the op lock releases, even on an exception path
         with self.store.op_lock(), ThreadPoolExecutor(max_workers=2) as pool:
-            deltas, rebuilt, committed = self._recover_map_chunks(pool, fixes)
-            # chunk_store: GC payloads whose chunk no longer exists.
-            # r13: dead/live counts come from one key-only aggregate
-            # over the membership join (two separate count() actions
-            # before); the payload-bearing `live` frame is only built
-            # when there is actually something to GC.
-            v_cs, cstore, _ = self.store.snapshot("chunk_store", CHUNK_STORE_SCHEMA)
-            live_keys = rebuilt.select("chunk_key")
-            n_cs_total, n_cs_live = (
-                cstore.select("chunk_key")
-                .join(live_keys.withColumn("_l", F.lit(1)), "chunk_key", "left")
-                .agg(F.count("*"), F.count("_l"))
-                .collect()[0]
-            )
-            n_dead = int(n_cs_total) - int(n_cs_live)
-            deltas["chunk_store"] = -n_dead
-            if n_dead:
-                # r12: same surgical shape for the payload GC — dead
-                # payloads are O(one crashed batch), the table is the
-                # 100 TB one; rewrite only the parts holding them
-                if not self._surgical_delete(
-                    "chunk_store",
-                    "chunk_key",
+            try:
+                deltas, rebuilt, committed = self._recover_map_chunks(pool, fixes)
+                # chunk_store: GC payloads whose chunk no longer exists.
+                # r13: dead/live counts come from one key-only aggregate
+                # over the membership join (two separate count() actions
+                # before); the payload-bearing `live` frame is only built
+                # when there is actually something to GC.
+                v_cs, cstore, _ = self.store.snapshot("chunk_store", CHUNK_STORE_SCHEMA)
+                live_keys = rebuilt.select("chunk_key")
+                n_cs_total, n_cs_live = (
                     cstore.select("chunk_key")
-                    .distinct()
-                    .join(rebuilt.select("chunk_key"), "chunk_key", "left_anti"),
-                ):
-                    live = cstore.join(live_keys, "chunk_key", "left_semi")
-                    self.store.commit("chunk_store", live, expected_version=v_cs)
-                committed = True
-            # every overlapped fix must land (and re-raise) before the
-            # ledger row claims the repaired state exists
-            for f in fixes:
-                f.result()
+                    .join(live_keys.withColumn("_l", F.lit(1)), "chunk_key", "left")
+                    .agg(F.count("*"), F.count("_l"))
+                    .collect()[0]
+                )
+                n_dead = int(n_cs_total) - int(n_cs_live)
+                deltas["chunk_store"] = -n_dead
+                if n_dead:
+                    # r12: same surgical shape for the payload GC — dead
+                    # payloads are O(one crashed batch), the table is the
+                    # 100 TB one; rewrite only the parts holding them
+                    if not self._surgical_delete(
+                        "chunk_store",
+                        "chunk_key",
+                        cstore.select("chunk_key")
+                        .distinct()
+                        .join(rebuilt.select("chunk_key"), "chunk_key", "left_anti"),
+                    ):
+                        live = cstore.join(live_keys, "chunk_key", "left_semi")
+                        self.store.commit("chunk_store", live, expected_version=v_cs)
+                    committed = True
+            finally:
+                # every overlapped fix must land (and re-raise) before the
+                # ledger row claims the repaired state exists — also when
+                # this pass failed, whose error becomes the fix error's
+                # context instead of hiding it
+                for f in fixes:
+                    f.result()
             if committed:
                 # a clean pass changed nothing — the previous ledger row
                 # still describes this exact state; only a repair that
@@ -2260,13 +2282,11 @@ class DedupeReadStream(io.RawIOBase):
 
     def _fetch(self, chunk_key: str) -> bytes:
         if chunk_key != self._cached_key:
-            rows = (
-                self._engine.chunk_store.filter(F.col("chunk_key") == chunk_key).take(1)
-            )
-            if not rows:
+            data = self._engine._payloads({chunk_key}).get(chunk_key)
+            if data is None:
                 raise OSError(f"missing chunk payload {chunk_key}")
             self._cached_key = chunk_key
-            self._cached_data = bytes(rows[0].data)
+            self._cached_data = data
         return self._cached_data
 
     def read(self, size: int = -1) -> bytes:

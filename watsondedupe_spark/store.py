@@ -16,9 +16,9 @@ only it. An *append* writes a part containing ONLY the new rows and a
 manifest referencing old parts + the new one — O(batch), not O(table),
 which is the difference between linear and quadratic total ingest cost
 over many batches. Readers resolve the manifest once and scan the listed
-parts as one multi-path parquet read. When a table accumulates more than
-``max_parts`` parts, the next append folds them into one (bounded read
-fan-in — the OPTIMIZE/compaction analogue).
+parts as one multi-path parquet read. Once a table holds ``max_parts``
+parts, the next append folds them into one (bounded read fan-in — the
+OPTIMIZE/compaction analogue).
 
 Every manifest version is also retained for the last ``retain_versions``
 commits, so ``read_version`` gives Delta-style time travel: part files
@@ -35,16 +35,26 @@ shape — the batched analogue of the reference's writer mutexes):
   names; only the manifest flip runs inside a short per-table critical
   section (``fcntl.flock`` here, a SQLite transaction in the second
   backend).
-* ``append`` REBASES inside the critical section — the fresh manifest's
+* There is ONE flip, :meth:`IndexStore._flip`: the only code that
+  enters the critical section, reads the fresh state, bumps the version
+  and writes it. Metadata-only changes (``update_meta``,
+  ``restore_version``) are flips; every part-publishing call
+  (``commit``, ``append``, ``attach_part``, ``compact_parts``) stages a
+  part and hands it to :meth:`IndexStore._publish`, which owns the CAS
+  check, the rebase, meta and skip-stats carry-forward, discarding the
+  part on conflict, and GC.
+* An append REBASES inside the critical section — the fresh manifest's
   part list plus the new part — so concurrent appends to one table
   interleave without lost parts (appends commute).
-* ``commit`` (full replace) takes ``expected_version``: if another
-  writer has published since the caller read its snapshot, the flip is
-  refused with :class:`ConcurrentWriteError` and the caller re-derives
-  from the fresh snapshot and retries — which makes read-modify-write
-  merges (refcount updates) serializable. ``expected_version=None``
-  keeps unconditional last-writer-wins replace for single-writer
-  callers.
+* ``expected_version`` arms the CAS check: if another writer has
+  published since the caller read its snapshot, the flip is refused
+  with :class:`ConcurrentWriteError` and the caller re-derives from the
+  fresh snapshot and retries — which makes read-modify-write merges
+  (refcount updates) serializable. ``expected_version=None`` keeps
+  unconditional last-writer-wins replace for single-writer callers.
+* There is ONE fold, :meth:`IndexStore._fold`: once ``max_parts`` parts
+  are live, ``append`` and ``attach_part`` rewrite them plus the new
+  rows (a DataFrame, or the staged part read back) as one part.
 
 Two interchangeable backends prove the swap point (the reference's
 ``DbProvider`` pluggability, src/DedupeLibrary/Database/DbProvider.cs:10,
@@ -73,6 +83,13 @@ from watsondedupe_spark.schemas import TABLE_SCHEMAS
 class ConcurrentWriteError(RuntimeError):
     """A CAS commit lost the race: the table advanced past the caller's
     snapshot version. Re-read, re-derive, retry."""
+
+
+def _stale(name: str, expected: int, found: int) -> ConcurrentWriteError:
+    return ConcurrentWriteError(
+        f"{name}: expected version {expected}, "
+        f"found {found} — another writer committed first"
+    )
 
 
 class IndexStore:
@@ -198,19 +215,27 @@ class IndexStore:
     def current_version(self, name: str) -> int:
         return self._state(name)["version"]
 
-    def _new_part_path(self, name: str, version_hint: int) -> str:
-        """Collision-free part dir name: version hint for operator
-        legibility + uuid suffix so racing writers never share a path."""
-        return os.path.join(
-            self._table_dir(name), f"p{version_hint:08d}_{uuid.uuid4().hex[:8]}"
-        )
-
-    def _df_for(self, state: dict, name: str, schema: StructType | None) -> DataFrame:
-        if not state["parts"]:
+    def _df_for(
+        self, name: str, parts: list[str], schema: StructType | None = None
+    ) -> DataFrame:
+        """One multi-path scan of ``parts`` (part dirs or single files);
+        an empty typed frame when there is nothing to read."""
+        if not parts:
             return self.spark.createDataFrame([], schema or TABLE_SCHEMAS[name])
-        return self.spark.read.parquet(*state["parts"])
+        return self.spark.read.parquet(*parts)
 
-    # -- manifest-level data skipping (round 8) ------------------------------
+    def _retained(self, name: str, version: int) -> dict:
+        """Manifest state of retained ``version``; ValueError once the
+        version has left the retention window."""
+        state = self._state_version(name, version)
+        if state is None:
+            raise ValueError(
+                f"version {version} of {name} is not retained "
+                f"(have {self.versions(name)})"
+            )
+        return state
+
+    # -- manifest-level data skipping ------------------------------------------
 
     #: per-table columns whose min/max footer stats are recorded in the
     #: manifest at write time. Point reads prune the PART LIST against
@@ -227,26 +252,24 @@ class IndexStore:
         "chunk_store": ["chunk_key"],
     }
 
-    def _part_stats(self, name: str, path: str) -> dict | None:
-        """Driver-side min/max of the skip columns across one part dir's
-        parquet footers (no Spark job — pyarrow reads only metadata).
-        Returns None when stats can't be trusted for every file (missing
-        footer stats, unexpected types): the part is then never pruned.
-        Parquet's truncated string statistics stay safe here — a
-        truncated min is a lower bound and a truncated max an upper
-        bound, so the span can only widen."""
-        cols = self.SKIP_STATS_COLS.get(name)
-        if not cols:
-            return None
+    @staticmethod
+    def _footer_spans(files: list[str], cols) -> dict | None:
+        """``{col: [lo, hi]}`` over every row group of ``files`` for the
+        ``cols`` they hold, read from parquet footers on the driver (no
+        Spark job). None when any of those stats can't be trusted
+        (missing min/max, unexpected types, unreadable footer): the
+        caller then never prunes. Parquet's truncated string statistics
+        stay safe — a truncated min is a lower bound and a truncated max
+        an upper bound, so a span can only widen. Binary bounds decode
+        as STRICT UTF-8: a lossy decode of truncated/invalid bytes is not
+        order-preserving (U+FFFD can sort a truncated max BELOW real
+        values), so an undecodable bound makes the stats untrusted."""
         import pyarrow.parquet as pq
 
         spans: dict[str, list] = {}
         try:
-            files = [f for f in os.listdir(path) if f.endswith(".parquet")]
-            if not files:
-                return None
-            for fn in files:
-                md = pq.ParquetFile(os.path.join(path, fn)).metadata
+            for fpath in files:
+                md = pq.ParquetFile(fpath).metadata
                 for rg in range(md.num_row_groups):
                     row_group = md.row_group(rg)
                     for ci in range(row_group.num_columns):
@@ -259,54 +282,41 @@ class IndexStore:
                             return None
                         lo, hi = st.min, st.max
                         if isinstance(lo, bytes):
-                            # strict decode only: a lossy ("replace")
-                            # decode of truncated/invalid UTF-8 stats is
-                            # NOT order-preserving (U+FFFD can sort a
-                            # truncated max BELOW real values), so any
-                            # undecodable bound makes the whole part's
-                            # stats untrusted — kept, never pruned
-                            try:
-                                lo, hi = lo.decode("utf-8"), hi.decode("utf-8")
-                            except UnicodeDecodeError:
-                                return None
+                            lo, hi = lo.decode("utf-8"), hi.decode("utf-8")
                         if not isinstance(lo, (str, int, float)):
                             return None
                         cur = spans.get(cname)
-                        if cur is None:
-                            spans[cname] = [lo, hi]
-                        else:
-                            cur[0], cur[1] = min(cur[0], lo), max(cur[1], hi)
+                        spans[cname] = (
+                            [lo, hi] if cur is None else [min(cur[0], lo), max(cur[1], hi)]
+                        )
         except Exception:  # noqa: BLE001 — stats are an optimization only
             return None
-        # every skip column must be covered, else a probe on the missing
-        # column would wrongly prune this part
-        return spans if set(spans) == set(cols) else None
+        return spans
 
-    _STATS_UNSET = object()
+    def _part_stats(self, name: str, path: str) -> dict | None:
+        """Skip-column spans across one part dir's footers, or None when
+        they can't be trusted for every file and every skip column (a
+        probe on an uncovered column would wrongly prune the part)."""
+        cols = self.SKIP_STATS_COLS.get(name)
+        if not cols:
+            return None
+        try:
+            files = [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
+        except OSError:
+            return None
+        spans = self._footer_spans(files, cols)
+        return spans if spans and set(spans) == set(cols) else None
 
-    def _attach_stats(
-        self, name: str, state: dict, path: str, precomputed=_STATS_UNSET
-    ) -> dict:
-        """New manifest state with ``path``'s skip stats recorded and
-        stale entries (retired parts) dropped. ``precomputed`` lets
-        callers do the footer read OUTSIDE their critical section
-        (``None`` there means "stats untrusted — never prune this part")."""
-        live = {os.path.basename(p) for p in state["parts"]}
-        stats = {
-            k: v for k, v in state.get("stats", {}).items() if k in live
-        }
-        ps = (
-            self._part_stats(name, path)
-            if precomputed is self._STATS_UNSET
-            else precomputed
-        )
-        if ps is not None:
-            stats[os.path.basename(path)] = ps
-        if stats:
-            state["stats"] = stats
-        else:
-            state.pop("stats", None)
-        return state
+    def _file_span(self, fpath: str, col: str):
+        """``[lo, hi]`` of ``col`` across one parquet FILE (cached — parts
+        are immutable), or None when untrusted (the file is then never
+        pruned)."""
+        cache = self._file_span_cache
+        if fpath not in cache:
+            if len(cache) >= 65536:
+                cache.clear()
+            cache[fpath] = (self._footer_spans([fpath], (col,)) or {}).get(col)
+        return cache[fpath]
 
     def _prune_parts(
         self, state: dict, col_ranges: dict[str, list[tuple]]
@@ -345,53 +355,9 @@ class IndexStore:
         manifest min/max spans overlap ``col_ranges`` (``{col: [(lo,
         hi), ...]}``; ``None`` bounds are open). The caller still applies
         the exact row filter — pruning only shrinks the file list."""
-        state = self._state(name)
-        parts = self._prune_parts(state, col_ranges)
-        if not parts:
-            return self.spark.createDataFrame([], schema or TABLE_SCHEMAS[name])
-        return self.spark.read.parquet(*parts)
-
-    def _file_span(self, fpath: str, col: str):
-        """``[lo, hi]`` of ``col`` across one parquet FILE's row groups
-        from its footer (driver-side, cached — parts are immutable), or
-        None when the stats can't be trusted (file is then never
-        pruned). Same strict-decode posture as :meth:`_part_stats`."""
-        cache = self._file_span_cache
-        hit = cache.get(fpath, self._STATS_UNSET)
-        if hit is not self._STATS_UNSET:
-            return hit
-        span = None
-        try:
-            import pyarrow.parquet as pq
-
-            md = pq.ParquetFile(fpath).metadata
-            for rg in range(md.num_row_groups):
-                row_group = md.row_group(rg)
-                for ci in range(row_group.num_columns):
-                    c = row_group.column(ci)
-                    if c.path_in_schema != col:
-                        continue
-                    st = c.statistics
-                    if st is None or not st.has_min_max:
-                        span = None
-                        raise StopIteration
-                    lo, hi = st.min, st.max
-                    if isinstance(lo, bytes):
-                        lo, hi = lo.decode("utf-8"), hi.decode("utf-8")
-                    if not isinstance(lo, (str, int, float)):
-                        span = None
-                        raise StopIteration
-                    span = (
-                        (lo, hi)
-                        if span is None
-                        else (min(span[0], lo), max(span[1], hi))
-                    )
-        except Exception:  # noqa: BLE001 — stats are an optimization only
-            span = None
-        if len(cache) >= 65536:
-            cache.clear()
-        cache[fpath] = span
-        return span
+        return self._df_for(
+            name, self._prune_parts(self._state(name), col_ranges), schema
+        )
 
     def read_key_range(
         self,
@@ -406,16 +372,13 @@ class IndexStore:
         bounds open). Parquet row-group pruning skips the BYTES of
         out-of-range files, but Spark still lists and plans a task per
         file — on a range-clustered 100 TB table a 1-of-n scrub shard
-        would schedule the full file count to read 1/n of it. This is
-        the Iceberg/Delta file-stats prune done manifest-side: footer
-        spans (driver-side, cached; parts are immutable) select the
-        shard's files BEFORE the scan is planned. Files without
-        trustworthy stats are always kept, and the caller still applies
-        the exact row predicate — pruning only shrinks the file list,
-        exactly like :meth:`read_pruned`."""
-        state = self._state(name)
+        would schedule the full file count to read 1/n of it. Footer
+        spans (:meth:`_file_span`) select the shard's files BEFORE the
+        scan is planned. Files without trustworthy stats are always
+        kept, and the caller still applies the exact row predicate —
+        pruning only shrinks the file list, like :meth:`read_pruned`."""
         keep: list[str] = []
-        for part in state.get("parts", []):
+        for part in self._state(name).get("parts", []):
             try:
                 files = sorted(
                     os.path.join(part, f)
@@ -433,21 +396,19 @@ class IndexStore:
                 flo, fhi = span
                 if (lo is None or lo <= fhi) and (hi is None or hi > flo):
                     keep.append(fpath)
-        if not keep:
-            return self.spark.createDataFrame([], schema or TABLE_SCHEMAS[name])
-        # plain read like _df_for — same inferred schema as the unpruned
+        # plain read like read() — same inferred schema as the unpruned
         # snapshot, so downstream plans are type-identical
-        return self.spark.read.parquet(*keep)
+        return self._df_for(name, keep, schema)
 
     #: (table, column) pairs whose keys are uniform cryptographic hashes
     #: (urlsafe-b64 SHA-256): any non-trivial part's span covers
     #: essentially the whole keyspace, so min/max SPAN pruning never
-    #: skips a part there — read_point skips the per-part span test for
-    #: these (round-9 advice) and relies on the Bloom sidecars instead,
-    #: which prune on membership rather than order (round 12).
+    #: skips a part there — part selection skips the span test for these
+    #: and relies on the Bloom sidecars, which prune on membership rather
+    #: than order.
     HASH_KEYED: frozenset = frozenset({("chunks", "chunk_key"), ("chunk_store", "chunk_key")})
 
-    # -- per-part Bloom sidecars (round 12) ----------------------------------
+    # -- per-part Bloom sidecars -------------------------------------------------
 
     #: key column per table that gets a Bloom sidecar at part-write
     #: time (see :mod:`watsondedupe_spark.bloom` for the design and the
@@ -465,8 +426,8 @@ class IndexStore:
 
     def _write_part(self, name: str, df: DataFrame, path: str) -> None:
         """Write ``df`` as an immutable part dir plus its Bloom sidecar
-        — the single choke point every part-creating commit path goes
-        through, so no part can miss its sidecar by omission."""
+        — the single choke point every part-creating path goes through,
+        so no part can miss its sidecar by omission."""
         df.write.mode("overwrite").parquet(path)
         self._write_bloom(name, path)
 
@@ -546,6 +507,47 @@ class IndexStore:
                 kept.append(p)
         return kept
 
+    def parts_for_keys(self, name: str, col: str, values: list) -> list[str]:
+        """Live parts that MAY contain any of ``values`` in ``col`` — the
+        one part selector behind :meth:`read_point` and the engine's
+        surgical part rewrites. Two independent witnesses apply: min/max
+        SPANS (skipped on :attr:`HASH_KEYED` columns; the probe set is
+        sorted once and each span tested by bisect, O(parts x log
+        |values|)), then Bloom sidecars (:meth:`_bloom_prune`), which
+        prune on MEMBERSHIP. Parts without stats/sidecars are always
+        kept and false positives only widen the selection. A NULL probe
+        has neither witness (footer spans and sidecars skip NULLs), and
+        an empty ``values`` asks about nothing: both keep every part —
+        the safe answer is "anywhere"."""
+        state = self._state(name)
+        parts = list(state.get("parts", []))
+        if not parts or not values or any(v is None for v in values):
+            return parts
+        if (name, col) not in self.HASH_KEYED:
+            import bisect
+
+            try:
+                vals = sorted(values)
+            except TypeError:  # mixed/unorderable probe types: no span pruning
+                vals = None
+            if vals:
+                stats = state.get("stats", {})
+                kept = []
+                for p in parts:
+                    span = (stats.get(os.path.basename(p)) or {}).get(col)
+                    if span is None:
+                        kept.append(p)  # no stats: cannot prune
+                        continue
+                    # smallest probe >= the part's low bound; a hit iff
+                    # it also sits at or below the part's high bound
+                    i = bisect.bisect_left(vals, span[0])
+                    if i < len(vals) and vals[i] <= span[1]:
+                        kept.append(p)
+                parts = kept
+        if parts and self.BLOOM_COLS.get(name) == col:
+            parts = self._bloom_prune(name, col, parts, list(values))
+        return parts
+
     def read_point(
         self,
         name: str,
@@ -553,126 +555,23 @@ class IndexStore:
         values: list,
         schema: StructType | None = None,
     ) -> DataFrame:
-        """Point-lookup form of :meth:`read_pruned`: keep only parts
-        that can contain one of ``values``, by two independent
-        witnesses — min/max SPANS (the probe set is sorted once and
-        each part span is tested with a bisect: O(parts x log |values|),
-        not O(parts x |values|) — a 100k-key batch probe against a
-        many-part store stays driver-cheap), then Bloom sidecars
-        (:meth:`_bloom_prune`), which prune on MEMBERSHIP and so still
-        work on the hash-keyed tables whose spans cover the whole
-        keyspace (:attr:`HASH_KEYED` skips the useless span test there).
-        """
-        state = self._state(name)
-        if (name, col) in self.HASH_KEYED:
-            parts = list(state["parts"])
-            vals = list(values) if values else []
-        else:
-            import bisect
-
-            stats = state.get("stats", {})
-            try:
-                vals = sorted(values)
-            except TypeError:  # mixed/unorderable probe types: no pruning
-                vals = None
-            if vals:
-                kept = []
-                for p in state["parts"]:
-                    span = (stats.get(os.path.basename(p)) or {}).get(col)
-                    if span is None:
-                        kept.append(p)  # no stats: cannot prune
-                        continue
-                    plo, phi = span
-                    # smallest probe >= the part's low bound; a hit iff
-                    # it also sits at or below the part's high bound
-                    i = bisect.bisect_left(vals, plo)
-                    if i < len(vals) and vals[i] <= phi:
-                        kept.append(p)
-                parts = kept
-            else:
-                parts = [] if vals is not None else state["parts"]
-        if parts and vals and self.BLOOM_COLS.get(name) == col:
-            parts = self._bloom_prune(name, col, parts, vals)
-        if not parts:
-            return self.spark.createDataFrame([], schema or TABLE_SCHEMAS[name])
-        return self.spark.read.parquet(*parts)
-
-    def parts_for_keys(self, name: str, col: str, values: list) -> list[str]:
-        """Live parts that MAY contain any of ``values`` in ``col`` —
-        the part-selection half of :meth:`read_point`, exposed for
-        surgical part rewrites (``repair()`` canonicalization): both
-        witnesses apply (min/max spans unless the table is
-        :attr:`HASH_KEYED`, then Bloom sidecars), parts without
-        stats/sidecars are always kept, and false positives only widen
-        the rewrite — never a correctness gate. An empty ``values``
-        keeps every part (the caller is asking about nothing; the safe
-        answer is "anywhere")."""
-        state = self._state(name)
-        parts = list(state.get("parts", []))
-        if not parts or not values:
-            return parts
-        vals: list | None
-        try:
-            vals = sorted(values)
-        except TypeError:
-            vals = None
-        if vals and (name, col) not in self.HASH_KEYED:
-            import bisect
-
-            stats = state.get("stats", {})
-            kept = []
-            for p in parts:
-                span = (stats.get(os.path.basename(p)) or {}).get(col)
-                if span is None:
-                    kept.append(p)
-                    continue
-                plo, phi = span
-                i = bisect.bisect_left(vals, plo)
-                if i < len(vals) and vals[i] <= phi:
-                    kept.append(p)
-            parts = kept
-        if parts and self.BLOOM_COLS.get(name) == col:
-            parts = self._bloom_prune(name, col, parts, list(values))
-        return parts
+        """Point-lookup form of :meth:`read_pruned`: scan only the parts
+        :meth:`parts_for_keys` selects for ``values``. An empty probe
+        reads nothing. The caller still applies the exact row filter."""
+        parts = self.parts_for_keys(name, col, values) if values else []
+        return self._df_for(name, parts, schema)
 
     def read_version(self, name: str, version: int) -> DataFrame:
         """Snapshot of ``name`` as of ``version`` — Delta-style time
         travel over the retained manifest history."""
-        state = self._state_version(name, version)
-        if state is None:
-            raise ValueError(
-                f"version {version} of {name} is not retained "
-                f"(have {self.versions(name)})"
-            )
-        return self._df_for(state, name, None)
-
-    def table_bytes(self, name: str) -> int:
-        """On-disk bytes of the table's LIVE parts — a driver-side walk
-        of the manifest's part dirs (manifest-metadata scale, no Spark
-        job). Used to size compaction layouts (file count = bytes /
-        target) without an extra data pass."""
-        total = 0
-        for part in self._state(name).get("parts", []):
-            for dirpath, _, files in os.walk(part):
-                for f in files:
-                    try:
-                        total += os.path.getsize(os.path.join(dirpath, f))
-                    except OSError:
-                        pass
-        return total
+        return self._df_for(name, self._retained(name, version)["parts"])
 
     def version_meta(self, name: str, version: int) -> dict:
         """The caller-carried table meta AS OF retained ``version`` —
         the historical counterpart of :meth:`table_meta` (e.g. the
         objects high-water mark at a consistency point). Raises like
         :meth:`read_version` when the version has expired."""
-        state = self._state_version(name, version)
-        if state is None:
-            raise ValueError(
-                f"version {version} of {name} is not retained "
-                f"(have {self.versions(name)})"
-            )
-        return state.get("meta", {})
+        return self._retained(name, version).get("meta", {})
 
     def _gc(self, name: str) -> None:
         """Remove part dirs unreachable from the current manifest AND
@@ -735,9 +634,9 @@ class IndexStore:
         (``{root}/_OPLOCK.{name}``, flock — cross-process and
         cross-thread on one host; both backends share it).
 
-        The per-table CAS above guarantees no table-level lost updates,
-        but a composite operation (ingest = 4 table commits, delete =
-        4 commits + payload GC) has no cross-table transaction, so two
+        The per-table CAS guarantees no table-level lost updates, but a
+        composite operation (ingest = 4 table commits, delete = 4
+        commits + payload GC) has no cross-table transaction, so two
         composite ops interleaving can produce cross-table anomalies
         (double-ingest of one key passing both pre-checks; a payload GC
         racing a revival). Engine write/delete paths therefore hold
@@ -790,7 +689,7 @@ class IndexStore:
 
     def read(self, name: str, schema: StructType | None = None) -> DataFrame:
         """Current snapshot of ``name``; empty (typed) DataFrame if absent."""
-        return self._df_for(self._state(name), name, schema)
+        return self._df_for(name, self._state(name)["parts"], schema)
 
     def snapshot(self, name: str, schema: StructType | None = None):
         """``(version, DataFrame, meta)`` resolved from ONE manifest
@@ -798,12 +697,159 @@ class IndexStore:
         the new state from the DataFrame/meta, then
         ``commit(..., expected_version=version)``."""
         state = self._state(name)
-        return state["version"], self._df_for(state, name, schema), state.get("meta", {})
+        return state["version"], self._df_for(name, state["parts"], schema), state.get("meta", {})
 
     def table_meta(self, name: str) -> dict:
         """Caller-provided table statistics carried in the manifest (the
         Delta/Iceberg table-properties analogue). Empty dict if none."""
         return self._state(name).get("meta", {})
+
+    def live_parts(self, name: str) -> list[str]:
+        """Current manifest's part paths (one manifest read, no Spark
+        job) — what :meth:`compact_parts` callers select a rewrite
+        subset from."""
+        return list(self._state(name).get("parts", []))
+
+    def parts_bytes(self, parts: list[str]) -> int:
+        """On-disk bytes of the given part dirs (driver-side walk, no
+        Spark job), used to size a compaction's output file count."""
+        total = 0
+        for part in parts:
+            for dirpath, _, files in os.walk(part):
+                for f in files:
+                    try:
+                        total += os.path.getsize(os.path.join(dirpath, f))
+                    except OSError:
+                        pass
+        return total
+
+    # -- the flip, the publisher and the fold ----------------------------------
+
+    def _flip(self, name: str, fn) -> dict:
+        """THE manifest flip, and the only code that enters the critical
+        section: read the fresh state, derive the next one as
+        ``fn(fresh)`` (which refuses by raising), bump the version and
+        persist it. Returns the published state."""
+        with self._transact(name):
+            fresh = self._state(name)
+            new = fn(fresh)
+            new["version"] = fresh["version"] + 1
+            if not new.get("stats"):
+                new.pop("stats", None)
+            self._write_state(name, new)
+        return new
+
+    def _stage(self, name: str, df: DataFrame, version_hint: int) -> str:
+        """Write ``df`` as an unpublished part under a collision-free
+        name (version hint for operator legibility + uuid suffix so
+        racing writers never share a path); returns its path."""
+        os.makedirs(self._table_dir(name), exist_ok=True)
+        path = os.path.join(
+            self._table_dir(name), f"p{version_hint:08d}_{uuid.uuid4().hex[:8]}"
+        )
+        self._write_part(name, df, path)
+        return path
+
+    def _publish(
+        self,
+        name: str,
+        path: str,
+        expected_version: int | None = None,
+        retire: list[str] | None = (),
+        meta: dict | None = None,
+        meta_merge: dict | None = None,
+        meta_fn=None,
+    ) -> int:
+        """Flip the staged part ``path`` into the manifest — the one CAS
+        contract every part-publishing call shares. Returns the new
+        version.
+
+        ``retire`` names the live parts the new part supersedes: empty
+        for an append (the part list REBASES on the fresh manifest, so
+        concurrent appends commute), ``None`` for every live part (a
+        full replace), or a subset that must all still be live at flip
+        time (a compaction: rewriting retired rows would resurrect
+        them). The flip is refused with :class:`ConcurrentWriteError`,
+        and the staged part discarded, when ``expected_version`` is set
+        and the table has moved past it or when a part to retire is
+        already gone.
+
+        Meta: ``None`` carries the fresh manifest's meta forward, a dict
+        replaces it, ``meta_merge`` merges keys into it and
+        ``meta_fn(meta, new_parts, path)`` derives it. Surviving parts'
+        skip stats carry forward; the new part's are read from its
+        footers OUTSIDE the critical section. A publish that can retire
+        parts runs GC afterwards."""
+        part_stats = self._part_stats(name, path)
+
+        def next_state(fresh: dict) -> dict:
+            if expected_version is not None and fresh["version"] != expected_version:
+                raise _stale(name, expected_version, fresh["version"])
+            if retire is None:
+                parts = [path]
+            else:
+                gone = set(retire)
+                missing = sorted(gone - set(fresh["parts"]))
+                if missing:
+                    raise ConcurrentWriteError(
+                        f"{name}: parts retired under compaction "
+                        f"(another writer committed first): {missing}"
+                    )
+                parts = [p for p in fresh["parts"] if p not in gone] + [path]
+            new_meta = fresh.get("meta", {}) if meta is None else meta
+            if meta_merge:
+                new_meta = {**new_meta, **meta_merge}
+            if meta_fn is not None:
+                new_meta = meta_fn(dict(new_meta), parts, path)
+            live = {os.path.basename(p) for p in parts}
+            stats = {k: v for k, v in fresh.get("stats", {}).items() if k in live}
+            if part_stats is not None:
+                stats[os.path.basename(path)] = part_stats
+            return {"parts": parts, "meta": new_meta, "stats": stats}
+
+        try:
+            version = self._flip(name, next_state)["version"]
+        except ConcurrentWriteError:
+            shutil.rmtree(path, ignore_errors=True)
+            raise
+        if retire is None or retire:
+            self._gc(name)
+        return version
+
+    def _fold(
+        self,
+        name: str,
+        rows: DataFrame,
+        meta: dict | None,
+        expected_version: int | None,
+        meta_merge: dict | None,
+    ) -> int:
+        """THE fold: rewrite every live part plus ``rows`` as one part
+        (bounded read fan-in once :attr:`max_parts` accumulate) and
+        publish it as a full replace armed at the version it read, so a
+        fold never swallows a concurrent writer's commit. A lost race
+        re-reads and retries up to :attr:`cas_retries` times — unless
+        the caller armed ``expected_version``, whose first conflict
+        raises."""
+        last_err: ConcurrentWriteError | None = None
+        for _ in range(self.cas_retries):
+            state = self._state(name)
+            v = state["version"]
+            if expected_version is not None and v != expected_version:
+                raise _stale(name, expected_version, v)
+            folded = self._df_for(name, state["parts"], rows.schema).unionByName(rows)
+            path = self._stage(name, folded, v + 1)
+            try:
+                return self._publish(
+                    name, path, v, retire=None, meta=meta, meta_merge=meta_merge
+                )
+            except ConcurrentWriteError as e:
+                if expected_version is not None:
+                    raise
+                last_err = e
+        raise last_err  # contended beyond the retry budget
+
+    # -- publishing calls ----------------------------------------------------
 
     def restore_version(self, name: str, version: int) -> int:
         """Metadata-only rollback (the Delta RESTORE analogue):
@@ -815,26 +861,15 @@ class IndexStore:
         parts stay GC-protected because :meth:`_gc` spares anything
         reachable from ANY retained manifest. Returns the new version.
         """
-        hist = self._state_version(name, version)
-        if hist is None:
-            raise ValueError(
-                f"version {version} of {name} is not retained "
-                f"(have {self.versions(name)})"
-            )
-        with self._transact(name):
-            state = self._state(name)
-            new = {
-                **state,
-                "version": state["version"] + 1,
+        hist = self._retained(name, version)
+        return self._flip(
+            name,
+            lambda fresh: {
                 "parts": hist.get("parts", []),
                 "meta": hist.get("meta", {}),
-            }
-            if hist.get("stats"):
-                new["stats"] = hist["stats"]
-            else:
-                new.pop("stats", None)
-            self._write_state(name, new)
-            return new["version"]
+                "stats": hist.get("stats"),
+            },
+        )["version"]
 
     def update_meta(self, name: str, fn) -> dict:
         """Transactional METADATA-ONLY update: ``meta = fn(meta)``
@@ -843,23 +878,11 @@ class IndexStore:
         what makes a per-composite-op ledger (engine checkpoints)
         affordable: a 1-row parquet append would put a full Spark
         job on every ingest's fixed-cost floor, and the engine's
-        small-batch path is fixed-cost-dominated by design. Works on
-        both backends (built purely on the _state/_write_state/
-        _transact override points)."""
-        os.makedirs(self._table_dir(name), exist_ok=True)
-        with self._transact(name):
-            state = self._state(name)
-            new_meta = fn(dict(state.get("meta") or {}))
-            self._write_state(
-                name,
-                {
-                    **state,
-                    "version": state["version"] + 1,
-                    "parts": state.get("parts", []),
-                    "meta": new_meta,
-                },
-            )
-        return new_meta
+        small-batch path is fixed-cost-dominated by design."""
+        return self._flip(
+            name,
+            lambda fresh: {**fresh, "meta": fn(dict(fresh.get("meta") or {}))},
+        )["meta"]
 
     def commit(
         self,
@@ -878,34 +901,10 @@ class IndexStore:
         re-derives from a fresh :meth:`snapshot` and retries. ``None``
         keeps unconditional last-writer-wins replace.
         """
-        os.makedirs(self._table_dir(name), exist_ok=True)
         hint = (expected_version if expected_version is not None
                 else self.current_version(name)) + 1
-        path = self._new_part_path(name, hint)
-        self._write_part(name, df, path)
-        with self._transact(name):
-            state = self._state(name)
-            if expected_version is not None and state["version"] != expected_version:
-                shutil.rmtree(path, ignore_errors=True)
-                raise ConcurrentWriteError(
-                    f"{name}: expected version {expected_version}, "
-                    f"found {state['version']} — another writer committed first"
-                )
-            new = state["version"] + 1
-            self._write_state(
-                name,
-                self._attach_stats(
-                    name,
-                    {
-                        "version": new,
-                        "parts": [path],
-                        "meta": state.get("meta", {}) if meta is None else meta,
-                    },
-                    path,
-                ),
-            )
-        self._gc(name)
-        return new
+        path = self._stage(name, df, hint)
+        return self._publish(name, path, expected_version, retire=None, meta=meta)
 
     def append(
         self,
@@ -923,9 +922,8 @@ class IndexStore:
         without lost parts. ``expected_version`` opts into the CAS check
         instead — for appends whose ROWS were derived from a snapshot
         (insert-if-absent, sequence-id assignment) and must be re-derived
-        if another writer landed first. Every ``max_parts`` appends the
-        parts fold into one (bounded read fan-in), itself CAS-retried so
-        a fold can never swallow a concurrent writer's commit.
+        if another writer landed first. Once ``max_parts`` parts are live
+        the append folds them into one (:meth:`_fold`).
         ``meta`` as in :meth:`commit`; ``meta_merge`` instead MERGES the
         given keys into the carried meta inside the critical section —
         an append that only advances its own watermark (e.g. the objects
@@ -935,64 +933,11 @@ class IndexStore:
         """
         state = self._state(name)
         if len(state["parts"]) >= self.max_parts:
-            # fold under CAS: a concurrent commit between our snapshot
-            # read and the flip must not be overwritten by the folded
-            # union — retry from the fresh snapshot
-            last_err: ConcurrentWriteError | None = None
-            for _ in range(self.cas_retries):
-                v, cur, cur_meta = self.snapshot(name, df.schema)
-                if expected_version is not None and v != expected_version:
-                    raise ConcurrentWriteError(
-                        f"{name}: expected version {expected_version}, found {v}"
-                    )
-                try:
-                    folded_meta = cur_meta if meta is None else meta
-                    if meta_merge:
-                        folded_meta = {**folded_meta, **meta_merge}
-                    return self.commit(
-                        name,
-                        cur.unionByName(df),
-                        meta=folded_meta,
-                        expected_version=v,
-                    )
-                except ConcurrentWriteError as e:
-                    if expected_version is not None:
-                        raise
-                    last_err = e
-            raise last_err  # contended beyond the retry budget
-        os.makedirs(self._table_dir(name), exist_ok=True)
-        path = self._new_part_path(name, state["version"] + 1)
-        self._write_part(name, df, path)
-        with self._transact(name):
-            fresh = self._state(name)  # REBASE: another append may have landed
-            if expected_version is not None and fresh["version"] != expected_version:
-                shutil.rmtree(path, ignore_errors=True)
-                raise ConcurrentWriteError(
-                    f"{name}: expected version {expected_version}, "
-                    f"found {fresh['version']} — another writer committed first"
-                )
-            new = fresh["version"] + 1
-            new_meta = fresh.get("meta", {}) if meta is None else meta
-            if meta_merge:
-                new_meta = {**new_meta, **meta_merge}
-            self._write_state(
-                name,
-                self._attach_stats(
-                    name,
-                    {
-                        "version": new,
-                        "parts": fresh["parts"] + [path],
-                        "meta": new_meta,
-                        **(
-                            {"stats": fresh["stats"]}
-                            if fresh.get("stats")
-                            else {}
-                        ),
-                    },
-                    path,
-                ),
-            )
-        return new
+            return self._fold(name, df, meta, expected_version, meta_merge)
+        path = self._stage(name, df, state["version"] + 1)
+        return self._publish(
+            name, path, expected_version, meta=meta, meta_merge=meta_merge
+        )
 
     def stage_part(self, name: str, df: DataFrame, version_hint: int) -> str:
         """Write ``df`` as an UNPUBLISHED part dir and return its path —
@@ -1003,10 +948,7 @@ class IndexStore:
         :meth:`_gc` ages out (the same guarantee in-flight concurrent
         appends already rely on). This is the Delta/Iceberg commit
         shape: optimistic data-file write, serialized metadata flip."""
-        os.makedirs(self._table_dir(name), exist_ok=True)
-        path = self._new_part_path(name, version_hint)
-        self._write_part(name, df, path)
-        return path
+        return self._stage(name, df, version_hint)
 
     def attach_part(
         self,
@@ -1017,103 +959,43 @@ class IndexStore:
         meta_merge: dict | None = None,
     ) -> int:
         """Publish a staged part: the manifest-flip half of an append —
-        no Spark job, just the transactional pointer update (plus the
-        bounded fold when the part list is full, which re-reads the
-        staged rows through the regular :meth:`append`). CAS semantics
+        no Spark job, just the transactional pointer update. When the
+        part list is full the staged part is instead one more input of
+        the fold (:meth:`_fold`) and is removed afterwards. CAS semantics
         match :meth:`append`: on conflict the staged part is discarded
         and :class:`ConcurrentWriteError` raised — the caller re-derives
         its rows from a fresh snapshot (staged ids/absence sets are
         snapshot-derived and stale after a conflicting commit).
         ``meta``/``meta_merge`` as in :meth:`append`."""
-        state = self._state(name)
-        if len(state["parts"]) >= self.max_parts:
-            df = self.spark.read.parquet(path).localCheckpoint(eager=True)
+        if len(self._state(name)["parts"]) >= self.max_parts:
             try:
-                return self.append(
-                    name,
-                    df,
-                    meta=meta,
-                    expected_version=expected_version,
-                    meta_merge=meta_merge,
+                return self._fold(
+                    name, self.spark.read.parquet(path), meta, expected_version,
+                    meta_merge,
                 )
             finally:
                 shutil.rmtree(path, ignore_errors=True)
-        # footer stats read OUTSIDE the critical section (the part is
-        # immutable once staged); the flip stays a pure pointer update
-        part_stats = self._part_stats(name, path)
-        with self._transact(name):
-            fresh = self._state(name)  # REBASE: another append may have landed
-            if expected_version is not None and fresh["version"] != expected_version:
-                shutil.rmtree(path, ignore_errors=True)
-                raise ConcurrentWriteError(
-                    f"{name}: expected version {expected_version}, "
-                    f"found {fresh['version']} — another writer committed first"
-                )
-            new = fresh["version"] + 1
-            new_meta = fresh.get("meta", {}) if meta is None else meta
-            if meta_merge:
-                new_meta = {**new_meta, **meta_merge}
-            self._write_state(
-                name,
-                self._attach_stats(
-                    name,
-                    {
-                        "version": new,
-                        "parts": fresh["parts"] + [path],
-                        "meta": new_meta,
-                        **(
-                            {"stats": fresh["stats"]}
-                            if fresh.get("stats")
-                            else {}
-                        ),
-                    },
-                    path,
-                    precomputed=part_stats,
-                ),
-            )
-        return new
+        return self._publish(
+            name, path, expected_version, meta=meta, meta_merge=meta_merge
+        )
 
     def compact(self, name: str, layout=None) -> int:
-        """Fold all live parts into one (the OPTIMIZE analogue); no-op on
-        an absent table. CAS-retried so compaction never swallows a
-        concurrent writer's commit.
+        """Fold all live parts into one (the OPTIMIZE analogue); 0 on an
+        absent or empty table. Retries :meth:`compact_parts` over the
+        fresh part list, so a concurrent append survives the compaction
+        and a concurrent replace is never swallowed.
 
         ``layout`` is an optional DataFrame->DataFrame reshaping applied
         before the rewrite (e.g. range-clustering by key so key-range
         predicates prune row groups afterwards); it must be a pure
         re-layout — same rows, any order/partitioning."""
-        if not self.exists(name):
-            return 0
         last_err: ConcurrentWriteError | None = None
         for _ in range(self.cas_retries):
-            v, cur, cur_meta = self.snapshot(name)
-            if layout is not None:
-                cur = layout(cur)
             try:
-                return self.commit(name, cur, meta=cur_meta, expected_version=v)
+                return self.compact_parts(name, self.live_parts(name), layout)
             except ConcurrentWriteError as e:
                 last_err = e
         raise last_err
-
-    def live_parts(self, name: str) -> list[str]:
-        """Current manifest's part paths (one manifest read, no Spark
-        job) — what :meth:`compact_parts` callers select a rewrite
-        subset from."""
-        return list(self._state(name).get("parts", []))
-
-    def parts_bytes(self, parts: list[str]) -> int:
-        """On-disk bytes of the given part dirs (driver-side walk, no
-        Spark job) — the :meth:`table_bytes` shape for a SUBSET, used to
-        size an incremental compaction's output file count."""
-        total = 0
-        for part in parts:
-            for dirpath, _, files in os.walk(part):
-                for f in files:
-                    try:
-                        total += os.path.getsize(os.path.join(dirpath, f))
-                    except OSError:
-                        pass
-        return total
 
     def compact_parts(self, name: str, parts: list[str], layout=None, meta_fn=None) -> int:
         """Rewrite ONLY ``parts`` into one new part, leaving every other
@@ -1133,55 +1015,19 @@ class IndexStore:
         :meth:`compact` it MAY drop rows when the caller's contract is a
         rewrite-with-cleanup (``engine.repair()`` canonicalizes corrupt
         payload rows out of exactly the affected parts this way).
-        ``meta_fn(meta, new_parts,
-        new_part)`` lets the caller update carried table meta (e.g. the
-        clustered-parts watermark) in the SAME manifest flip — no extra
-        version churn. Returns the new manifest version (0 when the
-        table is absent or ``parts`` is empty)."""
-        if not self.exists(name) or not parts:
+        ``meta_fn(meta, new_parts, new_part)`` lets the caller update
+        carried table meta (e.g. the clustered-parts watermark) in the
+        SAME manifest flip — no extra version churn. Returns the new
+        manifest version (0 when the table is absent or ``parts`` is
+        empty)."""
+        version = self.current_version(name)
+        if not version or not parts:
             return 0
-        todo = set(parts)
         df = self.spark.read.parquet(*parts)
         if layout is not None:
             df = layout(df)
-        path = self._new_part_path(name, self.current_version(name) + 1)
-        self._write_part(name, df, path)
-        # footer stats outside the critical section (part is immutable)
-        part_stats = self._part_stats(name, path)
-        with self._transact(name):
-            fresh = self._state(name)
-            missing = sorted(todo - set(fresh["parts"]))
-            if missing:
-                shutil.rmtree(path, ignore_errors=True)
-                raise ConcurrentWriteError(
-                    f"{name}: parts retired under compaction "
-                    f"(another writer committed first): {missing}"
-                )
-            new_parts = [p for p in fresh["parts"] if p not in todo] + [path]
-            meta = dict(fresh.get("meta", {}))
-            if meta_fn is not None:
-                meta = meta_fn(meta, new_parts, path)
-            new = fresh["version"] + 1
-            self._write_state(
-                name,
-                self._attach_stats(
-                    name,
-                    {
-                        "version": new,
-                        "parts": new_parts,
-                        "meta": meta,
-                        **(
-                            {"stats": fresh["stats"]}
-                            if fresh.get("stats")
-                            else {}
-                        ),
-                    },
-                    path,
-                    precomputed=part_stats,
-                ),
-            )
-        self._gc(name)
-        return new
+        path = self._stage(name, df, version + 1)
+        return self._publish(name, path, retire=parts, meta_fn=meta_fn)
 
 
 class SqliteIndexStore(IndexStore):
